@@ -685,7 +685,10 @@ object CoreOps {
     * so numwait sums its late_cnt. One slim exchange on l_orderkey
     * (explicit repartition — HashPartitioning(ok) clusters both the
     * (ok, sk) and the (ok) aggregate, so the two levels share it);
-    * orders(F) and supplier⋈nation ride as the broadcasts they are.
+    * the planner picks the orders(F) join strategy — no broadcast hint:
+    * orders filtered to status F is fact-sized, so at 100 TB a forced
+    * broadcast would OOM instead of falling back to a shuffle join
+    * (at sf0.1 the planner still broadcasts it).
     * The oracle SQL below stays the reference three-way form — the
     * driver's hash compare is the equivalence proof (verified at
     * sf0.01 and sf0.1). The top-100 is TakeOrderedAndProject;
@@ -698,7 +701,7 @@ object CoreOps {
       .select(col("o_orderkey"), col("o_orderdate"))
     val lo = s.table("lineitem")
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      .join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
+      .join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey"), col("l_suppkey"),
         (col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAY"))
           .as("late"))

@@ -40,14 +40,8 @@ object Branches {
   /** Create or move a ref — one atomic rename, the only mutation refs
     * ever see.
     */
-  private[graft] def moveRef(dir: String, name: String, v: Int): Unit = {
-    val tmp = java.nio.file.Paths.get(s"$dir/ref_$name.tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(s"$dir/ref_$name.txt"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private[graft] def moveRef(dir: String, name: String, v: Int): Unit =
+    Store.writeLinesAtomic(s"$dir/ref_$name.txt", Seq(v.toString))
 
   private[graft] def readRef(s: SparkSession, dir: String,
       name: String): DataFrame =
@@ -88,15 +82,7 @@ object Branches {
           round(col("c_acctbal") * 100).cast("long").as("bal"))
       base.repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val m1 = Option(new java.io.File(s"$dir/v1").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("nk="))
-        .flatMap(pd => pd.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath))
-        .toSeq.sorted
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       moveRef(dir, "main", 1)
       val log = new StringBuilder
       // branch etl: two staged commits, main pinned at 1 throughout

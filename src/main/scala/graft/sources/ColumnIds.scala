@@ -125,11 +125,8 @@ object ColumnIds {
     * pre-drop manifests expire, no reference to the bytes remains.
     */
   private[graft] def reclaimDroppedColumns(s: SparkSession, dir: String,
-      tag: String, maxAttempts: Int = 10): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
+      tag: String): (Int, Int) =
+    Store.retryOnConflict(dir, tag) { (h, sub) =>
       val mapped = resolveColmap(dir, h).map(c => s"c${c._1}").toSet
       val files = Snapshots.manifest(dir, h)
       val raw = s.read.option("mergeSchema", "true")
@@ -144,21 +141,13 @@ object ColumnIds {
       }.toSet
       val keep = raw.columns.filterNot(doomedCols.contains)
         .map(col).toSeq
-      val sub = s"$tag${h}a$attempt"
       s.read.option("mergeSchema", "true")
         .parquet(replaced.toSeq.sorted: _*)
         .select(keep: _*)
         .coalesce(2)
         .write.mode("overwrite").parquet(s"$dir/$sub")
-      try return (Snapshots.occCommit(dir, h, replaced,
-        Store.flatLeafFiles(dir, sub))._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      Snapshots.occCommit(dir, h, replaced, Store.flatLeafFiles(dir, sub))._1
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Lands the rename demo once per customer version:
     *  v1 = the base written under PHYSICAL ids (c1=key, c2=nation,
@@ -182,9 +171,7 @@ object ColumnIds {
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
       writeColmap(dir, 1,
         Seq((1, "k", "bigint"), (2, "nkd", "bigint"), (3, "bal", "bigint")))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Store.bucketedLeafFiles(dir, "v1").mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       require(commitColmap(dir, renameCol(3, "balance")) == 2,
         "the rename must land as v2")
       // post-rename write: physical ids, logical names irrelevant
@@ -249,9 +236,7 @@ object ColumnIds {
       writeColmap(dir, 1,
         Seq((1, "k", "bigint"), (2, "score", "bigint"),
           (3, "bal", "bigint")))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Store.flatLeafFiles(dir, "v1").mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.flatLeafFiles(dir, "v1"))
       require(commitColmap(dir, dropCol(2)) == 2)
       require(reclaimDroppedColumns(s, dir, "rc")._1 == 3)
       require(commitColmap(dir, addCol(4, "score", "bigint")) == 4)

@@ -61,9 +61,7 @@ object FileStats {
         .collect()
         .map(r => s"${r.getString(0)}|${r.getString(1)}|${r.getString(2)}|${r.getLong(3)}")
         .sorted
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/stats_1.txt"),
-        lines.mkString("\n").getBytes("UTF-8"))
+      Store.writeLines(s"$dir/stats_1.txt", lines.toSeq)
     }
 
   /** Parsed stats manifest: (path, min_od, max_od, rows) per live file. */

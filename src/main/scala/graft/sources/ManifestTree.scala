@@ -58,61 +58,32 @@ object ManifestTree {
     finally src.close()
   }
 
-  private def writeLines(path: String, lines: Seq[String]): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      lines.mkString("\n").getBytes("UTF-8"))
-
-  /** The manifest LIST is the commit point — it must appear fully
-    * written or not at all (bucket manifests are inert until a list
-    * names them, so plain writes suffice for those). Used only for the
-    * v1 bootstrap; every subsequent version publishes through
-    * [[treeOccCommit]]'s claim discipline.
-    */
-  private def publishLines(path: String, lines: Seq[String]): Unit = {
-    val tmp = java.nio.file.Paths.get(path + ".tmp")
-    java.nio.file.Files.write(tmp,
-      lines.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def refLine(r: BucketRef): String =
+    s"${r.nk}|${r.bm}|${r.rows}|${r.balLo}|${r.balHi}"
 
   /** Highest committed tree version: max N with a published mlist_N. */
   private[graft] def treeHead(dir: String): Int =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .collect { case n if n.startsWith("mlist_") && n.endsWith(".txt") =>
-        n.stripPrefix("mlist_").stripSuffix(".txt").toInt }
-      .foldLeft(0)(math.max)
+    Store.chainHead(dir, Store.TreeChain)
 
   /** BUCKETS tree version `v` replaced relative to its parent — the
     * tree's conflict-detection metadata, one granularity coarser than
     * occCommit's file sets (a tree commit swaps whole bucket manifests,
     * so bucket identity IS the conflict unit).
     */
-  private[graft] def treeReplacedOf(dir: String, v: Int): Set[Int] = {
-    val f = new java.io.File(dir, s"treplaced_$v.txt")
-    if (!f.exists()) Set.empty
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().filter(_.nonEmpty).map(_.toInt).toSet
-      finally src.close()
-    }
-  }
+  private[graft] def treeReplacedOf(dir: String, v: Int): Set[Int] =
+    Store.conflictLines(dir, Store.TreeChain, v).map(_.toInt)
 
-  /** OCC commit on the manifest TREE (round-16 verdict #4: the list
-    * publish previously bypassed the claim discipline — single-writer
-    * only). The [[Snapshots.occCommit]] protocol at bucket granularity:
+  /** OCC commit on the manifest TREE: [[Snapshots.occCommit]]'s policy
+    * at bucket granularity, published through [[Store.publish]] on the
+    * `mlist_` chain.
     *
-    *  - conflict check over the intervening versions' replaced-BUCKET
-    *    sets (missing metadata = conflict, the fail-on-expired-base
-    *    rule); disjoint buckets REBASE — the new list is the CURRENT
-    *    head's with our touched refs swapped in, every untouched
-    *    bucket's manifest file reused verbatim (line-identical, the
-    *    O(touched) commit-metadata contract);
-    *  - the slot is claimed with an O_EXCL `mlist_N.txt.claim`;
-    *    `treplaced_N.txt` is durable before the list's atomic rename;
-    *  - a loser of the claim race waits for the winner's list and
-    *    retries the whole check from the new head.
+    *  - the conflict check runs over the intervening versions'
+    *    replaced-BUCKET sets (`treplaced_N.txt`); disjoint buckets
+    *    REBASE — the new list is the CURRENT head's with our touched
+    *    refs swapped in, every untouched bucket's manifest file reused
+    *    verbatim (line-identical, the O(touched) commit-metadata
+    *    contract);
+    *  - an overlap throws [[Snapshots.CommitConflictException]].
     *
     * New buckets (nk absent from the head's list) append. Returns
     * (committedVersion, claimRetries).
@@ -120,57 +91,17 @@ object ManifestTree {
   private[graft] def treeOccCommit(dir: String, readV: Int,
       newRefs: Seq[BucketRef], claimWaitMs: Long = 10000L): (Int, Int) = {
     val touched = newRefs.map(_.nk).toSet
-    val byNk = newRefs.map(r => r.nk -> r).toMap
-    var retries = 0
-    while (true) {
-      val h = treeHead(dir)
-      if (!new java.io.File(dir, s"mlist_$readV.txt").exists())
-        throw new Snapshots.CommitConflictException(
-          s"stale base: tree snapshot v$readV expired")
-      val metaGone = ((readV + 1) to h).filter(v =>
-        !new java.io.File(dir, s"treplaced_$v.txt").exists())
-      if (metaGone.nonEmpty)
-        throw new Snapshots.CommitConflictException(
-          s"stale base: tree conflict metadata expired for " +
-            s"version(s) ${metaGone.mkString(",")}")
-      val concurrent =
-        ((readV + 1) to h).flatMap(treeReplacedOf(dir, _)).toSet
-      val overlap = concurrent.intersect(touched)
+    Store.publish(dir, Store.TreeChain, Some(readV), claimWaitMs) { h =>
+      val overlap = Store.replacedSince(dir, Store.TreeChain, readV, h)
+        .map(_.toInt).intersect(touched)
       if (overlap.nonEmpty)
         throw new Snapshots.CommitConflictException(
           s"concurrent tree commit rewrote bucket(s) ${overlap.mkString(",")}" +
             s" this commit also touches (read v$readV, head v$h)")
-      val n = h + 1
-      val claim = new java.io.File(dir, s"mlist_$n.txt.claim")
-      try {
-        java.nio.file.Files.createFile(claim.toPath) // atomic test-and-set
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/treplaced_$n.txt"),
-          touched.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-        val rebased = (mlist(dir, h).filterNot(r => touched(r.nk)) ++
-          newRefs).sortBy(_.nk)
-        val tmp = java.nio.file.Paths.get(s"$dir/mlist_$n.tmp")
-        java.nio.file.Files.write(tmp,
-          rebased.map(r => s"${r.nk}|${r.bm}|${r.rows}|${r.balLo}|${r.balHi}")
-            .mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(s"$dir/mlist_$n.txt"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        return (n, retries)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          retries += 1
-          val mf = new java.io.File(dir, s"mlist_$n.txt")
-          val deadline = System.nanoTime() + claimWaitMs * 1000000L
-          while (!mf.exists() && System.nanoTime() < deadline)
-            Thread.sleep(2)
-          if (!mf.exists())
-            throw new Snapshots.CommitConflictException(
-              s"orphaned tree claim for version $n; manual recovery: " +
-                "remove " + claim.getPath)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+      Some(Store.Candidate(touched.toSeq.sorted.map(_.toString), () =>
+        (mlist(dir, h).filterNot(r => touched(r.nk)) ++ newRefs)
+          .sortBy(_.nk).map(refLine)))
+    }.get // the bucket-overlap check throws, never declines
   }
 
   /** Tree-resolved bucket rewrite (the tree-level cowMerge): credit one
@@ -178,43 +109,32 @@ object ManifestTree {
     * conflict-retry. Returns (version, attempts).
     */
   private[graft] def treeCredit(s: SparkSession, dir: String, nk: Int,
-      cents: Long, tag: String, maxAttempts: Int = 10): (Int, Int) =
-    treeRewrite(s, dir, nk, tag, maxAttempts)(df =>
+      cents: Long, tag: String): (Int, Int) =
+    treeRewrite(s, dir, nk, tag)(df =>
       df.withColumn("bal", col("bal") + lit(cents)))
 
   /** Tree-resolved bucket compaction (the tree-level compactBucket):
     * rewrite the bucket's files as one, content unchanged.
     */
   private[graft] def treeCompactBucket(s: SparkSession, dir: String,
-      nk: Int, tag: String, maxAttempts: Int = 10): (Int, Int) =
-    treeRewrite(s, dir, nk, tag, maxAttempts, coalesce1 = true)(identity)
+      nk: Int, tag: String): (Int, Int) =
+    treeRewrite(s, dir, nk, tag, coalesce1 = true)(identity)
 
   private def treeRewrite(s: SparkSession, dir: String, nk: Int,
-      tag: String, maxAttempts: Int, coalesce1: Boolean = false)(
-      xform: DataFrame => DataFrame): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = treeHead(dir)
+      tag: String, coalesce1: Boolean = false)(
+      xform: DataFrame => DataFrame): (Int, Int) =
+    Store.retryOnConflict(dir, tag, Store.TreeChain) { (h, sub) =>
       val ref = mlist(dir, h).find(_.nk == nk).getOrElse(
         throw new IllegalArgumentException(s"no bucket nk=$nk at tree v$h"))
-      val sub = s"$tag${h}a$attempt"
       val base = xform(s.read.parquet(bucketFiles(ref.bm).sorted: _*))
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
       (if (coalesce1) base.coalesce(1) else base.repartition(col("nk")))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
       val entries = Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, sub))
       val bm = s"$dir/bm_nk${nk}_$sub.txt"
-      writeLines(bm, entries)
-      try return (treeOccCommit(dir, h,
-        Seq(bucketRef(nk, bm, entries)))._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      Store.writeLines(bm, entries)
+      treeOccCommit(dir, h, Seq(bucketRef(nk, bm, entries)))._1
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Bucket-level stats roll up from the bucket's file entries: row
     * count plus the value column's [lo, hi] — so a VALUE predicate can
@@ -256,11 +176,12 @@ object ManifestTree {
       val v1ByBucket = byBucket(Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       val refs1 = v1ByBucket.toSeq.sortBy(_._1).map { case (nk, entries) =>
         val bm = s"$dir/bm_nk${nk}_v1.txt"
-        writeLines(bm, entries)
+        Store.writeLines(bm, entries)
         bucketRef(nk, bm, entries)
       }
-      publishLines(s"$dir/mlist_1.txt",
-        refs1.map(r => s"${r.nk}|${r.bm}|${r.rows}|${r.balLo}|${r.balHi}"))
+      // the list is the commit point: it appears fully written or not at
+      // all (bucket manifests are inert until a list names them)
+      Store.writeLinesAtomic(s"$dir/mlist_1.txt", refs1.map(refLine))
       // ---- the v2 commit, resolved through the TREE -------------------
       val touched = refs1.map(_.nk).filter(_ % 5 == 2).toSet
       // merge-side metadata fetch: ONLY the touched buckets' manifests
@@ -281,7 +202,7 @@ object ManifestTree {
       val refs2touched = v2ByBucket.toSeq.sortBy(_._1)
         .map { case (nk, entries) =>
           val bm = s"$dir/bm_nk${nk}_v2.txt"
-          writeLines(bm, entries)
+          Store.writeLines(bm, entries)
           bucketRef(nk, bm, entries)
         }
       require(treeOccCommit(dir, 1, refs2touched)._1 == 2,

@@ -68,12 +68,8 @@ object PartitionEvolution {
         .parquet(s"$dir/spec2")
       val m1 = leaves(s"$dir/spec1").map(p => s"1|$p")
       val m2 = m1 ++ leaves(s"$dir/spec2").map(p => s"2|$p")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_2.txt"),
-        m2.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, m1)
+      Store.writeManifest(dir, 2, m2)
     }
 
   private[graft] def specManifest(dir: String, v: Int)

@@ -57,24 +57,11 @@ object Snapshots {
       .withColumn("bal", col("bal") + lit(1000L))
       .repartition(col("nk"))
       .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v2delta")
-    def files(sub: String, skipNk: Option[Int]): Seq[String] = {
-      val root = new java.io.File(s"$dir/$sub")
-      Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("nk=") &&
-          !skipNk.exists(n => f.getName == s"nk=$n"))
-        .flatMap(pd => pd.listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath))
-        .toSeq.sorted
-    }
-    val m1 = files("v1", skipNk = None)
-    val m2 = files("v1", skipNk = Some(3)) ++ files("v2delta", None)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-      m1.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/manifest_2.txt"),
-      m2.mkString("\n").getBytes("UTF-8"))
+    val sep = java.io.File.separator
+    val m1 = Store.bucketedLeafFiles(dir, "v1")
+    Store.writeManifest(dir, 1, m1)
+    Store.writeManifest(dir, 2, m1.filterNot(_.contains(s"${sep}nk=3$sep")) ++
+      Store.bucketedLeafFiles(dir, "v2delta"))
   }
 
   private[graft] def s16Dir(s: SparkSession, d: String): String =
@@ -253,128 +240,51 @@ object Snapshots {
     * A driver-side directory listing — the metastore-head fetch.
     */
   private[graft] def head(dir: String): Int =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .collect { case n if n.startsWith("manifest_") && n.endsWith(".txt") =>
-        n.stripPrefix("manifest_").stripSuffix(".txt").toInt }
-      .foldLeft(0)(math.max)
+    Store.chainHead(dir, Store.FlatChain)
 
   /** Files commit `v` REPLACED relative to its parent — the conflict-
     * detection metadata every OCC table format records per snapshot
     * (Iceberg's snapshot summary / Delta's remove actions). Version 1
     * (the base) and pre-OCC manifests have none.
     */
-  private[graft] def replacedOf(dir: String, v: Int): Set[String] = {
-    val f = new java.io.File(dir, s"replaced_$v.txt")
-    if (!f.exists()) Set.empty
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().filter(_.nonEmpty).toSet finally src.close()
-    }
-  }
+  private[graft] def replacedOf(dir: String, v: Int): Set[String] =
+    Store.conflictLines(dir, Store.FlatChain, v)
 
   /** Optimistic-concurrency commit (the Iceberg/Delta protocol): the
     * writer prepared `added` files against the snapshot it READ
-    * (`readV`); publication re-reads the head, and
+    * (`readV`) and publishes through [[Store.publish]] on the
+    * `manifest_` chain. The policy this adds is the file-granularity
+    * conflict rule:
     *
     *  - a concurrent advance whose replaced files are DISJOINT from ours
     *    REBASES: the new manifest is recomputed from the CURRENT head
     *    (keeping the other writer's files) — both updates land;
-    *  - an overlap at FILE granularity throws [[CommitConflictException]]
+    *  - an overlap throws [[CommitConflictException]] before any claim
     *    — our base rows were rewritten under us, a rebase would silently
-    *    drop the other writer's update (lost update);
-    *  - the version slot itself is claimed with an atomic O_EXCL file
-    *    create (`manifest_N.txt.claim` — the only true test-and-set the
-    *    filesystem gives; an ATOMIC_MOVE onto an existing target is a
-    *    silent POSIX rename replace). A loser of the claim race waits for
-    *    the winner's manifest to publish, then retries from the new head.
+    *    drop the other writer's update (lost update).
     *
-    * Readers are never torn: they key on `manifest_N.txt`, which appears
-    * only via an atomic rename of a fully-written temp file, AFTER
-    * `replaced_N.txt` is durable (so conflict metadata is never missing
-    * for a visible version). Returns (committedVersion, claimRetries).
-    *
-    * At 100 TB this is the production commit: cost is one head fetch +
-    * one conflict intersection over the intervening snapshots' replaced
-    * lists (metadata, never data) + one atomic publish; contention cost
-    * is re-running exactly that metadata step. A crashed claimant can
-    * orphan a claim file (bounded wait, then an exception naming it) —
-    * real stores close that gap with a metastore CAS / conditional put;
-    * the protocol above it is identical.
-    */
-  /** `beforePublish(n)` runs while HOLDING the slot-n claim, after the
-    * replaced-file metadata is durable and before the manifest's atomic
-    * rename — the hook for version-addressed sidecars (delete files,
-    * watermarks) that must never be missing for a visible version. It
-    * must be idempotent; a crash between it and the rename orphans the
-    * claim (same recovery path as any mid-publish death).
+    * `replaced_N.txt` records our replaced files for later writers'
+    * checks. `beforePublish(n)` runs while holding the slot-n claim (see
+    * [[Store.publish]]). Returns (committedVersion, claimRetries).
     */
   private[graft] def occCommit(dir: String, readV: Int,
       replaced: Set[String], added: Seq[String],
       claimWaitMs: Long = 10000L,
-      beforePublish: Int => Unit = _ => ()): (Int, Int) = {
-    var retries = 0
-    while (true) {
-      val h = head(dir)
-      // Fail-on-expired-base (Iceberg semantics): retention may have
-      // deleted the base manifest or an intervening version's
-      // replaced-file metadata; treating missing metadata as no-conflict
-      // would let a stale writer rebase past rewrites it cannot see —
-      // a silent lost update. Missing metadata IS a conflict.
-      if (!new java.io.File(dir, s"manifest_$readV.txt").exists())
-        throw new CommitConflictException(
-          s"stale base: snapshot v$readV expired " +
-            s"(manifest_$readV.txt missing — re-read the current head)")
-      val metaGone = ((readV + 1) to h).filter(v =>
-        !new java.io.File(dir, s"replaced_$v.txt").exists())
-      if (metaGone.nonEmpty)
-        throw new CommitConflictException(
-          s"stale base: conflict metadata expired for version(s) " +
-            s"${metaGone.mkString(",")} (read v$readV, head v$h) — " +
-            "re-read the current head")
-      val concurrent = ((readV + 1) to h).flatMap(replacedOf(dir, _)).toSet
-      val overlap = concurrent.intersect(replaced)
+      beforePublish: Int => Unit = _ => ()): (Int, Int) =
+    Store.publish(dir, Store.FlatChain, Some(readV), claimWaitMs,
+      beforePublish) { h =>
+      val overlap =
+        Store.replacedSince(dir, Store.FlatChain, readV, h).intersect(replaced)
       if (overlap.nonEmpty)
         throw new CommitConflictException(
           s"concurrent commit rewrote ${overlap.size} file(s) this commit " +
             s"also replaces (read v$readV, head v$h): ${overlap.take(3)}")
-      val n = h + 1
-      val claim = new java.io.File(dir, s"manifest_$n.txt.claim")
-      try {
-        java.nio.file.Files.createFile(claim.toPath) // atomic test-and-set
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/replaced_$n.txt"),
-          replaced.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-        // rebase over ENTRIES: parent lines (with their stats) survive
-        // untouched unless replaced by path; `added` may carry stats
-        val newManifest =
-          (manifestLines(dir, h).filterNot(l => replaced(pathOf(l))) ++
-            added).sortBy(pathOf)
-        val tmp = java.nio.file.Paths.get(s"$dir/manifest_$n.tmp")
-        java.nio.file.Files.write(tmp,
-          newManifest.mkString("\n").getBytes("UTF-8"))
-        beforePublish(n) // sidecars durable before the version is visible
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(s"$dir/manifest_$n.txt"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        return (n, retries)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          // lost the slot-N claim race: wait for the winner's manifest,
-          // then retry the whole conflict check from the new head
-          retries += 1
-          val mf = new java.io.File(dir, s"manifest_$n.txt")
-          val deadline = System.nanoTime() + claimWaitMs * 1000000L
-          while (!mf.exists() && System.nanoTime() < deadline)
-            Thread.sleep(2)
-          if (!mf.exists())
-            throw new CommitConflictException(
-              s"orphaned claim for version $n (claimant died mid-publish); " +
-                "manual recovery: remove " + claim.getPath)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      // rebase over ENTRIES: parent lines (with their stats) survive
+      // untouched unless replaced by path; `added` may carry stats
+      Some(Store.Candidate(replaced.toSeq.sorted, () =>
+        (manifestLines(dir, h).filterNot(l => replaced(pathOf(l))) ++
+          added).sortBy(pathOf)))
+    }.get // the file-overlap check throws, never declines
 
   /** One writer's prepare step: rewrite a single nation's bucket with a
     * credit, against the `readV` snapshot (`base` carries that
@@ -393,13 +303,7 @@ object Snapshots {
       .withColumn("bal", col("bal") + lit(creditCents))
       .repartition(col("nk"))
       .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
-    val added = Option(new java.io.File(s"$dir/$sub").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("nk="))
-      .flatMap(pd => pd.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath))
-      .toSeq.sorted
-    (replaced, added)
+    (replaced, Store.bucketedLeafFiles(dir, sub))
   }
 
   /** Lands the OCC demo once per source version: v1 base, then TWO
@@ -417,15 +321,7 @@ object Snapshots {
           balCents.as("bal"))
       base.repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val m1 = Option(new java.io.File(s"$dir/v1").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("nk="))
-        .flatMap(pd => pd.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath))
-        .toSeq.sorted
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       // both writers prepare against v1 BEFORE either commits — the
       // optimistic part; B's read version is stale by publish time
       val (repA, addA) = prepareCredit(dir, 1, base, 1, 500L, "wA")
@@ -490,12 +386,8 @@ object Snapshots {
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v2add")
       val m1 = Store.bucketedLeafFiles(dir, "v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_2.txt"),
-        (m1 ++ Store.bucketedLeafFiles(dir, "v2add")).mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, m1)
+      Store.writeManifest(dir, 2, m1 ++ Store.bucketedLeafFiles(dir, "v2add"))
     }
 
   /** Version read under MIXED schemas: `mergeSchema` unions the file
@@ -613,41 +505,24 @@ object Snapshots {
     occCommit(dir, readV, replaced, added)._1
   }
 
-  /** Transactional MERGE with the standard OCC retry: each attempt
-    * prepares against the CURRENT head; on [[CommitConflictException]]
-    * (a concurrent writer rewrote one of our buckets between our head
-    * fetch and publish) the merge re-reads the new head — which now
-    * contains that writer's rows — and re-applies the change batch, so
-    * both updates land exactly once in some serial order. Returns
-    * (committedVersion, attempts). The change batch is eagerly
-    * checkpointed once: retries re-shuffle only the touched buckets,
-    * never re-derive the changes.
+  /** Transactional MERGE with the standard OCC retry
+    * ([[Store.retryOnConflict]]): each attempt prepares against the
+    * CURRENT head; on [[CommitConflictException]] (a concurrent writer
+    * rewrote one of our buckets between our head fetch and publish) the
+    * merge re-reads the new head — which now contains that writer's
+    * rows — and re-applies the change batch, so both updates land
+    * exactly once in some serial order. Returns (committedVersion,
+    * attempts). The change batch is eagerly checkpointed once: retries
+    * re-shuffle only the touched buckets, never re-derive the changes.
     */
-  /** Writer-unique token for staging subdirs — two concurrent
-    * [[cowMerge]] calls sharing a tag at the same head must not clobber
-    * each other's staged files before commit (round-15 advice; tags
-    * ride FIRST in the subdir name, so marker-prefix containment checks
-    * like e28's are unaffected).
-    */
-  private val stagingSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   private[graft] def cowMerge(s: SparkSession, dir: String,
-      changes: DataFrame, tag: String, maxAttempts: Int = 5): (Int, Int) = {
+      changes: DataFrame, tag: String): (Int, Int) = {
     val chg = changes.localCheckpoint(true)
     val touched = chg.select(col("nk")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted // bounded: ≤ |buckets|
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = head(dir)
-      val sub = s"$tag${h}a${attempt}u${stagingSeq.incrementAndGet()}"
-      try return (mergeAttempt(s, dir, chg, touched, h, sub), attempt)
-      catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+    Store.retryOnConflict(dir, tag) { (h, sub) =>
+      mergeAttempt(s, dir, chg, touched, h, sub)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Maintenance: compact one bucket's files into a single file through
@@ -669,28 +544,26 @@ object Snapshots {
     * rather than operational.
     */
   private[graft] def compactBucket(s: SparkSession, dir: String, nk: Int,
-      tag: String, maxAttempts: Int = 10): (Int, Int) = {
-    val sep = java.io.File.separator
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = head(dir)
-      val bucket = manifest(dir, h)
-        .filter(_.contains(s"${sep}nk=$nk$sep")).toSet
-      require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
-      val sub = s"$tag${h}a${attempt}u${stagingSeq.incrementAndGet()}"
+      tag: String): (Int, Int) =
+    Store.retryOnConflict(dir, tag) { (h, sub) =>
+      val bucket = bucketFiles(dir, h, nk)
       s.read.parquet(bucket.toSeq.sorted: _*)
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
         .coalesce(1)
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
       val added = statsEntries(s, Store.bucketedLeafFiles(dir, sub))
-      try return (occCommit(dir, h, bucket, added)._1, attempt)
-      catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      occCommit(dir, h, bucket, added)._1
     }
-    throw new IllegalStateException("unreachable")
+
+  /** The files of bucket `nk` (its `nk=` dir) in version `v`'s manifest;
+    * a bucket with no files is an error.
+    */
+  private[graft] def bucketFiles(dir: String, v: Int,
+      nk: Int): Set[String] = {
+    val sep = java.io.File.separator
+    val bucket = manifest(dir, v).filter(_.contains(s"${sep}nk=$nk$sep")).toSet
+    require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$v")
+    bucket
   }
 
   /** The MERGE demo's change batch, fully engine-derivable: per-customer
@@ -737,10 +610,8 @@ object Snapshots {
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
       // the bootstrap commit carries stats too, so a pruned read of any
       // head covers untouched buckets as well as rewritten ones
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        statsEntries(s, Store.bucketedLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       val (v, _) = cowMerge(s, dir, s22Changes(s, d, base), "m")
       require(v == 2, s"MERGE demo expected v2, committed v$v")
     }
@@ -1136,15 +1007,7 @@ object Snapshots {
           balCents.as("bal"))
       base.repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val m1 = Option(new java.io.File(s"$dir/v1").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("nk="))
-        .flatMap(pd => pd.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath))
-        .toSeq.sorted
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       val (rep, add) = prepareCredit(dir, 1, base, 6, 9999L, "oops")
       val (v2, _) = occCommit(dir, 1, rep, add)
       require(v2 == 2)
@@ -1189,13 +1052,8 @@ object Snapshots {
     * Tags are what make "keep the quarter-close snapshot" a metadata
     * operation instead of a data copy.
     */
-  private[graft] def writeTag(dir: String, name: String, v: Int): Unit = {
-    val tmp = java.nio.file.Paths.get(s"$dir/tag_$name.tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(s"$dir/tag_$name.txt"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private[graft] def writeTag(dir: String, name: String, v: Int): Unit =
+    Store.writeLinesAtomic(s"$dir/tag_$name.txt", Seq(v.toString))
 
   private[graft] def tags(dir: String): Map[String, Int] =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
@@ -1284,9 +1142,7 @@ object Snapshots {
           balCents.as("bal"))
       base.repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Store.bucketedLeafFiles(dir, "v1").mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       val (rep2, add2) = prepareCredit(dir, 1, base, 4, 250L, "t2")
       require(occCommit(dir, 1, rep2, add2)._1 == 2)
       writeTag(dir, "q2close", 2)
@@ -1425,27 +1281,28 @@ object Snapshots {
         })
     }
     val ClaimRe = raw"manifest_(\d+)\.txt\.claim".r
+    val slotPrefixes =
+      Store.sidecarPrefixes ++ Store.FlatChain.conflictPrefix
     staleMeta
       .filter(p =>
         java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff)
       .foreach { p =>
-        // A crashed claimant may have published version-addressed
-        // sidecars (deletes_N / colmap_N / replaced_N) via beforePublish
-        // before dying short of the manifest rename. Once its claim is
-        // swept, a later writer retakes slot N WITHOUT writing a sidecar
-        // — and nearest-at-or-below resolution would attribute the
-        // orphaned stale sidecar to the new version (rows silently
-        // masked as deleted, or the wrong schema resolved). Sweep the
-        // slot's sidecars WITH the claim, but only for slots whose
-        // manifest never published (a published version owns its
+        // A crashed claimant may have published its conflict metadata
+        // and version-addressed sidecars (every Store.sidecarPrefixes
+        // dialect) before dying short of the manifest rename. Once its
+        // claim is swept, a later writer retakes slot N WITHOUT writing
+        // a sidecar — and nearest-at-or-below resolution would
+        // attribute the orphaned stale sidecar to the new version (rows
+        // silently masked as deleted, or the wrong schema resolved).
+        // Sweep the slot's sidecars WITH the claim, but only for slots
+        // whose manifest never published (a published version owns its
         // sidecars).
         p.getFileName.toString match {
           case ClaimRe(slot) if !new java.io.File(
               p.getParent.toString, s"manifest_$slot.txt").exists() =>
-            Seq(s"deletes_$slot.txt", s"colmap_$slot.txt",
-                s"replaced_$slot.txt").foreach(n =>
+            slotPrefixes.foreach(prefix =>
               java.nio.file.Files.deleteIfExists(
-                p.getParent.resolve(n)))
+                p.getParent.resolve(s"$prefix$slot.txt")))
           case _ => ()
         }
         java.nio.file.Files.deleteIfExists(p)
@@ -1476,10 +1333,8 @@ object Snapshots {
       base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        statsEntries(s, Store.bucketedLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       import s.implicits._
       val k5 = base.filter(col("nk") === 5)
         .agg(min(col("k")), max(col("k"))).first()

@@ -28,31 +28,17 @@ object SortedCompaction {
     * with a sort order. Returns (committedVersion, attempts).
     */
   private[graft] def sortedCompactBucket(s: SparkSession, dir: String,
-      nk: Int, tag: String, nFiles: Int,
-      maxAttempts: Int = 10): (Int, Int) = {
-    val sep = java.io.File.separator
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
-      val bucket = Snapshots.manifest(dir, h)
-        .filter(_.contains(s"${sep}nk=$nk$sep")).toSet
-      require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
-      val sub = s"$tag${h}a$attempt"
+      nk: Int, tag: String, nFiles: Int): (Int, Int) =
+    Store.retryOnConflict(dir, tag) { (h, sub) =>
+      val bucket = Snapshots.bucketFiles(dir, h, nk)
       s.read.parquet(bucket.toSeq.sorted: _*)
         .repartitionByRange(nFiles, col("bal"))
         .sortWithinPartitions(col("bal"))
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
       val added = Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, sub))
-      try return (Snapshots.occCommit(dir, h, bucket, added)._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      Snapshots.occCommit(dir, h, bucket, added)._1
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   private[graft] val BalMin = 500000L // the selective read's floor
   // nk=11: the bucket with the most rows at the 2026-08-19-regen
@@ -78,10 +64,8 @@ object SortedCompaction {
       base.withColumn("nk", col("nkd"))
         .repartition(6, col("k")) // value-unsorted ingest splits
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       require(sortedCompactBucket(s, dir, CompactedNk, "sc",
         RangeFiles)._1 == 2)
     }

@@ -18,13 +18,22 @@ package graft.sources
   *    registry instead of hardcoding names;
   *  - METADATA FILE WRITES: plain write for bootstrap manifests (no
   *    readers yet) and temp + atomic rename for anything a reader may
-  *    already be watching.
+  *    already be watching;
+  *  - the PUBLISH PROTOCOL ([[publish]]): the one place a version slot
+  *    is claimed and a version file renamed in, for every chain — flat
+  *    manifests, the manifest tree's lists, and transaction heads —
+  *    plus the one conflict-retry loop ([[retryOnConflict]]) every
+  *    maintenance writer runs around it.
   *
-  * The COMMIT PROTOCOL itself (head / manifest / occCommit / vacuum)
-  * stays in [[Snapshots]], which every module and spec already
-  * addresses by that name; this module is the layer below it.
+  * The commit POLICIES (what conflicts with what, how a manifest
+  * rebases) stay with their owners: [[Snapshots.occCommit]],
+  * [[ManifestTree.treeOccCommit]], [[TxnPair.commitTxn]] and
+  * [[WriteAuditPublish.auditedPublish]] each pass [[publish]] a
+  * pre-claim check and nothing else.
   */
 object Store {
+  import java.nio.file.{Files, Path, Paths}
+  import Snapshots.CommitConflictException
 
   // ---- leaf-file listings ---------------------------------------------------
 
@@ -81,10 +90,14 @@ object Store {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Bootstrap manifest write (entries may carry stats). */
+  /** Bootstrap manifest write (entries may carry stats); creates `dir`
+    * for a member table that has no files yet.
+    */
   private[graft] def writeManifest(dir: String, v: Int,
-      entries: Seq[String]): Unit =
+      entries: Seq[String]): Unit = {
+    new java.io.File(dir).mkdirs()
     writeLines(s"$dir/manifest_$v.txt", entries)
+  }
 
   // ---- version-addressed sidecars -------------------------------------------
 
@@ -129,4 +142,187 @@ object Store {
   private[graft] def writeSidecar(dir: String, prefix: String, v: Int,
       lines: Seq[String]): Unit =
     writeLines(s"$dir/$prefix$v.txt", lines)
+
+  // ---- the publish protocol -------------------------------------------------
+
+  /** A version chain: `<prefix>N.txt` published in version order, and
+    * the prefix of its conflict metadata (`<conflictPrefix>N.txt`, what
+    * version N replaced; None = the chain records none).
+    */
+  private[graft] final case class Chain(prefix: String,
+      conflictPrefix: Option[String])
+
+  private[graft] val FlatChain = Chain("manifest_", Some("replaced_"))
+  private[graft] val TreeChain = Chain("mlist_", Some("treplaced_"))
+  private[graft] val TxnChain = Chain("txn_", None)
+
+  /** Highest published version of a chain: max N with `<prefix>N.txt`
+    * (a driver-side listing, the metastore-head fetch); 0 when empty.
+    */
+  private[graft] def chainHead(dir: String, chain: Chain): Int =
+    sidecarVersions(dir, chain.prefix).lastOption.getOrElse(0)
+
+  /** Lines of version `v`'s conflict metadata (empty when it has none). */
+  private[graft] def conflictLines(dir: String, chain: Chain,
+      v: Int): Set[String] =
+    chain.conflictPrefix.map(p => new java.io.File(dir, s"$p$v.txt"))
+      .filter(_.exists()).fold(Set.empty[String]) { f =>
+        val src = scala.io.Source.fromFile(f)
+        try src.getLines().filter(_.nonEmpty).toSet finally src.close()
+      }
+
+  /** Everything versions readV+1..h replaced — the set a writer that
+    * read `readV` must not overlap.
+    */
+  private[graft] def replacedSince(dir: String, chain: Chain, readV: Int,
+      h: Int): Set[String] =
+    ((readV + 1) to h).flatMap(conflictLines(dir, chain, _)).toSet
+
+  /** A version a pre-claim check approved. `conflict` is written,
+    * verbatim and in order, as the chain's conflict metadata. The
+    * version file is either `staged` already (renamed in as is, and
+    * deleted if the claim is lost) or written from `lines()`, which
+    * runs while the claim is held.
+    */
+  private[graft] final case class Candidate(conflict: Seq[String],
+      lines: () => Seq[String] = () => Nil,
+      staged: Option[Path] = None)
+
+  /** THE publish protocol, for every chain (the Iceberg/Delta commit
+    * expressed directly). Each attempt
+    *
+    *  1. re-reads the chain head h;
+    *  2. fails on an expired base (readV given): a missing base version
+    *     or missing conflict metadata for any version in readV+1..h
+    *     throws — treating missing metadata as no-conflict would let a
+    *     stale writer rebase past rewrites it cannot see;
+    *  3. runs the caller's `check` against h, which throws
+    *     [[CommitConflictException]], declines (None — nothing is
+    *     published, None is returned) or approves a [[Candidate]];
+    *  4. claims slot h+1 with an O_EXCL `<prefix>N.txt.claim` create —
+    *     the only true filesystem test-and-set (an ATOMIC_MOVE onto an
+    *     existing target is a silent POSIX rename replace);
+    *  5. makes the conflict metadata durable;
+    *  6. runs `beforePublish(n)` — the hook for version-addressed
+    *     sidecars that must never be missing for a visible version (it
+    *     must be idempotent);
+    *  7. writes the temp version file and publishes it by ATOMIC_MOVE,
+    *     so readers keyed on `<prefix>N.txt` never see a torn file.
+    *
+    * A loser of the claim race waits up to `claimWaitMs` for the
+    * winner's version file and retries from step 1; a claim that never
+    * publishes (a claimant that died mid-publish) throws, naming the
+    * claim file to remove. Returns Some((committedVersion,
+    * claimRetries)).
+    *
+    * At 100 TB this is the production commit: one head fetch, one
+    * metadata check, one atomic publish; contention re-runs only that
+    * metadata step. Real stores replace the claim file with a metastore
+    * CAS or conditional put — the protocol above it is identical.
+    */
+  private[graft] def publish(dir: String, chain: Chain,
+      readV: Option[Int], claimWaitMs: Long = 10000L,
+      beforePublish: Int => Unit = _ => ())(
+      check: Int => Option[Candidate]): Option[(Int, Int)] = {
+    @annotation.tailrec
+    def attempt(retries: Int): Option[(Int, Int)] = {
+      val h = chainHead(dir, chain)
+      readV.foreach(requireBase(dir, chain, _, h))
+      check(h) match {
+        case None => None
+        case Some(c) =>
+          val n = h + 1
+          val claim = Paths.get(s"$dir/${chain.prefix}$n.txt.claim")
+          val won =
+            try { Files.createFile(claim); true }
+            catch { case _: java.nio.file.FileAlreadyExistsException => false }
+          if (won) {
+            chain.conflictPrefix.foreach(p =>
+              writeLines(s"$dir/$p$n.txt", c.conflict))
+            val tmp = c.staged.getOrElse {
+              val t = Paths.get(s"$dir/${chain.prefix}$n.tmp")
+              writeLines(t.toString, c.lines())
+              t
+            }
+            beforePublish(n)
+            Files.move(tmp, Paths.get(s"$dir/${chain.prefix}$n.txt"),
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            Some((n, retries))
+          } else {
+            c.staged.foreach(Files.deleteIfExists)
+            awaitPublished(dir, chain, n, claim, claimWaitMs)
+            attempt(retries + 1)
+          }
+      }
+    }
+    attempt(0)
+  }
+
+  private def requireBase(dir: String, chain: Chain, readV: Int,
+      h: Int): Unit = {
+    if (!new java.io.File(dir, s"${chain.prefix}$readV.txt").exists())
+      throw new CommitConflictException(
+        s"stale base: snapshot v$readV expired (${chain.prefix}$readV.txt " +
+          "missing — re-read the current head)")
+    chain.conflictPrefix.foreach { p =>
+      val metaGone = ((readV + 1) to h).filter(v =>
+        !new java.io.File(dir, s"$p$v.txt").exists())
+      if (metaGone.nonEmpty)
+        throw new CommitConflictException(
+          s"stale base: conflict metadata expired for version(s) " +
+            s"${metaGone.mkString(",")} (read v$readV, head v$h) — " +
+            "re-read the current head")
+    }
+  }
+
+  private def awaitPublished(dir: String, chain: Chain, n: Int,
+      claim: Path, claimWaitMs: Long): Unit = {
+    val published = new java.io.File(dir, s"${chain.prefix}$n.txt")
+    val deadline = System.nanoTime() + claimWaitMs * 1000000L
+    while (!published.exists() && System.nanoTime() < deadline)
+      Thread.sleep(2)
+    if (!published.exists())
+      throw new CommitConflictException(
+        s"orphaned claim for version $n (claimant died mid-publish); " +
+          s"manual recovery: remove $claim")
+  }
+
+  // ---- the conflict-retry loop ----------------------------------------------
+
+  /** Attempts a maintenance writer makes before its last conflict
+    * propagates.
+    */
+  private[graft] val MaxAttempts = 10
+
+  /** Writer-unique token for staging subdirs: two writers sharing a tag
+    * at the same head must never stage into the same dir — a static
+    * `mode("overwrite")` would delete the first writer's staged files
+    * and its commit would publish paths that no longer exist.
+    */
+  private val stagingSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The conflict-retry loop every maintenance writer runs: each attempt
+    * reads the chain head h, mints a staging subdir
+    * `<tag><h>a<attempt>u<token>` (the tag FIRST, so marker-prefix
+    * containment checks like e28's still match), and runs
+    * `attempt(h, subdir)`; a [[CommitConflictException]] re-runs it
+    * from the new head — a rewrite of derived state is always safe to
+    * redo — until [[MaxAttempts]]. Returns (result, attempts).
+    */
+  private[graft] def retryOnConflict[T](dir: String, tag: String,
+      chain: Chain = FlatChain)(attempt: (Int, String) => T): (T, Int) = {
+    @annotation.tailrec
+    def run(a: Int): (T, Int) = {
+      val h = chainHead(dir, chain)
+      val sub = s"$tag${h}a${a}u${stagingSeq.incrementAndGet()}"
+      val out =
+        try Some(attempt(h, sub))
+        catch { case _: CommitConflictException if a < MaxAttempts => None }
+      out match {
+        case Some(r) => (r, a)
+        case None => run(a + 1)
+      }
+    }
+    run(1)
+  }
 }

@@ -100,12 +100,9 @@ object TxnDeletes {
     * derived state, safe to redo). Returns (version, attempts).
     */
   private[graft] def purgeDeletes(s: SparkSession, dir: String,
-      tag: String, maxAttempts: Int = 10): (Int, Int) = {
+      tag: String): (Int, Int) = {
     val sep = java.io.File.separator
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
+    Store.retryOnConflict(dir, s"${tag}purge") { (h, sub) =>
       val dvs = resolveDeletes(dir, h)
       require(dvs.nonEmpty, s"nothing to purge at v$h")
       val doomed = s.read.parquet(dvs: _*)
@@ -114,7 +111,6 @@ object TxnDeletes {
       val replaced = Snapshots.manifest(dir, h)
         .filter(p => touched.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
         .toSet
-      val sub = s"${tag}purge${h}a$attempt"
       s.read.parquet(replaced.toSeq.sorted: _*)
         .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_anti")
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
@@ -127,15 +123,10 @@ object TxnDeletes {
       // OCC) keeps its files in the sidecar instead of being silently
       // emptied away; its keys stay masked until the next purge.
       val purged = dvs.toSet
-      try return (Snapshots.occCommit(dir, h, replaced, added,
+      Snapshots.occCommit(dir, h, replaced, added,
         beforePublish = n => writeSidecar(dir, n,
-          resolveDeletes(dir, n - 1).filterNot(purged)))._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+          resolveDeletes(dir, n - 1).filterNot(purged)))._1
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Stats-pruned MERGE-ON-READ snapshot: [[Snapshots.readVersionPruned]]
@@ -425,10 +416,8 @@ object TxnDeletes {
       base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       def credit(cents: Long): DataFrame =
         base.filter(col("nk") % 7 === 3)
           .select(col("nk").cast("int").as("nk"), col("k"),

@@ -38,11 +38,7 @@ object TxnPair {
 
   /** Highest published transaction: max N with a `txn_N.txt`. */
   private[graft] def txnHead(dir: String): Int =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .collect { case n if n.startsWith("txn_") && n.endsWith(".txt") =>
-        n.stripPrefix("txn_").stripSuffix(".txt").toInt }
-      .foldLeft(0)(math.max)
+    Store.chainHead(dir, Store.TxnChain)
 
   /** The table→version pinning of transaction `n`. */
   private[graft] def txnRead(dir: String, n: Int): Map[String, Int] = {
@@ -56,84 +52,46 @@ object TxnPair {
 
   /** Atomically publish a transaction pinning `vers` (every member
     * table's manifest must already be durable — the caller's prepare
-    * step). O_EXCL slot claim + rename of a fully-written temp: the s19
-    * publication discipline, one level up. Returns the txn number.
+    * step) through [[Store.publish]] on the `txn_` chain: O_EXCL slot
+    * claim + rename of a fully-written temp, the s19 publication
+    * discipline one level up. Returns the txn number.
     *
-    * A LOST claim does not blindly take the next slot (round-15 advice:
-    * readers resolve the MAX slot, so publishing an older table-version
-    * pair under a higher slot than a concurrent newer pair would make
-    * the newer commit permanently invisible — a lost update with no
-    * conflict signal). Instead the loser waits for the winner's txn to
-    * publish (the occCommit discipline), verifies its own pins still
-    * SUPERSEDE every table the winner pinned, and only then claims the
-    * next slot; a regression throws [[Snapshots.CommitConflictException]]
-    * and the caller must re-prepare against the new head.
+    * The pre-claim check is SUPERSESSION: `vers` must pin, per table, at
+    * least what the CURRENT head transaction pins. Readers resolve the
+    * MAX slot, so publishing an older table-version pair under a higher
+    * slot than a concurrent newer pair would make the newer commit
+    * permanently invisible — a lost update with no conflict signal —
+    * whether the staleness arrives via a lost claim race (the loser
+    * re-checks against the winner's txn) or a caller that prepared long
+    * ago. A regression throws [[Snapshots.CommitConflictException]] and
+    * the caller must re-prepare against the new head.
     */
-  /** Throws unless `vers` supersedes (>= per table) every pin of the
-    * CURRENT head transaction — publishing an older table-version pair
-    * under a higher slot would make the newer commit permanently
-    * invisible, whether the staleness arrives via a lost claim race or
-    * a caller that prepared long ago.
-    */
-  private def requireSupersedes(dir: String, vers: Map[String, Int],
-      headTxn: Int): Unit =
-    if (headTxn >= 1) {
-      val pinned = txnRead(dir, headTxn)
-      val regressed = pinned.filter { case (t, v) =>
-        !vers.get(t).exists(_ >= v) }
-      if (regressed.nonEmpty)
-        throw new Snapshots.CommitConflictException(
-          s"txn head (slot $headTxn) pins newer versions for " +
-            s"${regressed.keys.mkString(",")} — re-prepare against the " +
-            "new transaction head before committing")
-    }
-
   private[graft] def commitTxn(dir: String, vers: Map[String, Int],
-      claimWaitMs: Long = 10000L): Int = {
-    val h0 = txnHead(dir)
-    requireSupersedes(dir, vers, h0)
-    var n = h0 + 1
-    while (true) {
-      val claim = new java.io.File(dir, s"txn_$n.txt.claim")
-      try {
-        java.nio.file.Files.createFile(claim.toPath)
-        val tmp = java.nio.file.Paths.get(s"$dir/txn_$n.tmp")
-        java.nio.file.Files.write(tmp,
-          vers.toSeq.sorted.map { case (t, v) => s"$t=$v" }
-            .mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(s"$dir/txn_$n.txt"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        return n
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val tf = new java.io.File(dir, s"txn_$n.txt")
-          val deadline = System.nanoTime() + claimWaitMs * 1000000L
-          while (!tf.exists() && System.nanoTime() < deadline)
-            Thread.sleep(2)
-          if (!tf.exists())
-            throw new Snapshots.CommitConflictException(
-              s"orphaned txn claim for slot $n (claimant died mid-" +
-                "publish); manual recovery: remove " + claim.getPath)
-          requireSupersedes(dir, vers, n)
-          n += 1
+      claimWaitMs: Long = 10000L): Int =
+    Store.publish(dir, Store.TxnChain, None, claimWaitMs) { h =>
+      if (h >= 1) {
+        val regressed = txnRead(dir, h).filter { case (t, v) =>
+          !vers.get(t).exists(_ >= v) }
+        if (regressed.nonEmpty)
+          throw new Snapshots.CommitConflictException(
+            s"txn head (slot $h) pins newer versions for " +
+              s"${regressed.keys.mkString(",")} — re-prepare against the " +
+              "new transaction head before committing")
       }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      Some(Store.Candidate(Nil, () =>
+        vers.toSeq.sorted.map { case (t, v) => s"$t=$v" }))
+    }.get._1 // the supersession check throws, never declines
 
+  /** A member table's manifest write and its flat leaf listing, named
+    * for the member-table layout (both are [[Store]]'s).
+    */
   private[graft] def writeManifest(tableDir: String, v: Int,
-      files: Seq[String]): Unit = {
-    new java.io.File(tableDir).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$tableDir/manifest_$v.txt"),
-      files.mkString("\n").getBytes("UTF-8"))
-  }
+      files: Seq[String]): Unit = Store.writeManifest(tableDir, v, files)
 
-  private[graft] def leaves(sub: String): Seq[String] =
-    Option(new java.io.File(sub).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-      .toSeq.sorted
+  private[graft] def leaves(sub: String): Seq[String] = {
+    val d = new java.io.File(sub)
+    Store.flatLeafFiles(d.getParent, d.getName)
+  }
 
   /** Read a member table at the CURRENT transaction head. */
   private[graft] def readAtHead(s: SparkSession, dir: String,
@@ -168,16 +126,16 @@ object TxnPair {
       val fact = factSlim(s, d)
       val f1 = fact.filter(col("sd") < Cut)
       f1.write.mode("overwrite").parquet(s"$dir/A/v1")
-      writeManifest(s"$dir/A", 1, leaves(s"$dir/A/v1"))
+      Store.writeManifest(s"$dir/A", 1, Store.flatLeafFiles(dir, "A/v1"))
       rollup(f1).write.mode("overwrite").parquet(s"$dir/B/v1")
-      writeManifest(s"$dir/B", 1, leaves(s"$dir/B/v1"))
+      Store.writeManifest(s"$dir/B", 1, Store.flatLeafFiles(dir, "B/v1"))
       require(commitTxn(dir, Map("A" -> 1, "B" -> 1)) == 1)
       fact.filter(col("sd") >= Cut)
         .write.mode("overwrite").parquet(s"$dir/A/v2delta")
-      writeManifest(s"$dir/A", 2,
-        leaves(s"$dir/A/v1") ++ leaves(s"$dir/A/v2delta"))
+      Store.writeManifest(s"$dir/A", 2, Store.flatLeafFiles(dir, "A/v1") ++
+        Store.flatLeafFiles(dir, "A/v2delta"))
       rollup(fact).write.mode("overwrite").parquet(s"$dir/B/v2")
-      writeManifest(s"$dir/B", 2, leaves(s"$dir/B/v2"))
+      Store.writeManifest(s"$dir/B", 2, Store.flatLeafFiles(dir, "B/v2"))
       require(commitTxn(dir, Map("A" -> 2, "B" -> 2)) == 2)
     }
 

@@ -53,77 +53,46 @@ object WriteAuditPublish {
     */
   private val stageSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Stage → audit → publish-or-reject. The staged manifest lives at
-    * `manifest_<n>.txt.audit.<tok>` (invisible: [[Snapshots.head]]
-    * matches only `.txt`); publish takes the version slot with the
-    * occCommit O_EXCL claim FIRST (round-15 advice: a bare ATOMIC_MOVE
-    * onto `manifest_N.txt` is a silent POSIX rename replace — two
-    * concurrent publishers picking the same N would lose one audited-
-    * green commit), then renames the stage in. A publisher that loses
-    * the claim race waits for the winner's manifest and re-runs the
-    * WHOLE stage+audit from the new head — the audit's row-conservation
-    * premise is against the parent snapshot, so a moved head invalidates
-    * it. A red audit never claims a slot at all: rejects consume
-    * nothing. Returns true iff published.
+  /** Stage → audit → publish-or-reject, through [[Store.publish]] on
+    * the `manifest_` chain with the AUDIT as the pre-claim check. The
+    * staged manifest lives at `manifest_<n>.txt.audit.<tok>` (invisible:
+    * [[Snapshots.head]] matches only `.txt`) and is renamed in as the
+    * version file once the slot is claimed; `replaced_<n>.txt` records
+    * the parent files the candidate no longer lists, so later
+    * occCommits see WAP versions' rewrites. A publisher that loses the
+    * claim race drops its stage and re-runs the WHOLE stage+audit from
+    * the new head — the audit's row-conservation premise is against the
+    * parent snapshot, so a moved head invalidates it. A red audit never
+    * claims a slot at all: rejects consume nothing. Returns true iff
+    * published.
     */
   private[graft] def auditedPublish(s: SparkSession, dir: String,
       files: Seq[String], auditLog: StringBuilder,
-      claimWaitMs: Long = 10000L): Boolean = {
-    while (true) {
-      val h = Snapshots.head(dir)
-      val parentRows = s.read.parquet(Snapshots.manifest(dir, h): _*).count()
+      claimWaitMs: Long = 10000L): Boolean =
+    Store.publish(dir, Store.FlatChain, None, claimWaitMs) { h =>
+      val parentRows =
+        s.read.parquet(Snapshots.manifest(dir, h): _*).count()
       val n = h + 1
       val stage = java.nio.file.Paths.get(
         s"$dir/manifest_$n.txt.audit.${stageSeq.incrementAndGet()}")
-      java.nio.file.Files.write(stage,
-        files.sorted.mkString("\n").getBytes("UTF-8"))
+      Store.writeLines(stage.toString, files.sorted)
       val (dups, oob, delta) = audit(s, dir, files, parentRows)
       val ok = dups == 0 && oob == 0 && delta == 0
       auditLog.append(s"candidate $n: dups=$dups outOfDomain=$oob " +
         s"rowDelta=$delta -> ${if (ok) "PUBLISH" else "REJECT"}\n")
-      if (!ok) {
+      if (ok) {
+        val candidate = files.toSet
+        Some(Store.Candidate(
+          Snapshots.manifest(dir, h).filterNot(candidate).sorted,
+          staged = Some(stage)))
+      } else {
         // a rejected candidate's stage file is garbage NOW, not vacuum
         // fodder later (round-16 advice: metadata orphans accumulated
         // unbounded in long-lived stores)
         java.nio.file.Files.deleteIfExists(stage)
-        return false
+        None
       }
-      val claim = new java.io.File(dir, s"manifest_$n.txt.claim")
-      try {
-        java.nio.file.Files.createFile(claim.toPath) // atomic test-and-set
-        // conflict metadata durable BEFORE the manifest is visible (the
-        // occCommit ordering discipline): a WAP version replaces exactly
-        // the parent files its candidate no longer lists, and recording
-        // that lets a later occCommit detect conflicts across WAP
-        // versions instead of failing on missing metadata
-        val candidate = files.toSet
-        val replaced = Snapshots.manifest(dir, h).filterNot(candidate)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/replaced_$n.txt"),
-          replaced.sorted.mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.move(stage,
-          java.nio.file.Paths.get(s"$dir/manifest_$n.txt"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        return true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          // lost the slot: drop our stage file (a fresh one is staged on
-          // retry), wait for the winner's publish (claims here are only
-          // ever taken by green candidates about to rename), then
-          // re-stage and RE-AUDIT against the new head
-          java.nio.file.Files.deleteIfExists(stage)
-          val mf = new java.io.File(dir, s"manifest_$n.txt")
-          val deadline = System.nanoTime() + claimWaitMs * 1000000L
-          while (!mf.exists() && System.nanoTime() < deadline)
-            Thread.sleep(2)
-          if (!mf.exists())
-            throw new Snapshots.CommitConflictException(
-              s"orphaned claim for version $n (claimant died mid-" +
-                "publish); manual recovery: remove " + claim.getPath)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+    }.isDefined
 
   private def nkFiles(m: Seq[String], nk: Int): Seq[String] = {
     val sep = java.io.File.separator
@@ -150,9 +119,7 @@ object WriteAuditPublish {
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
       val m1 = Store.bucketedLeafFiles(dir, "v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, m1)
       val log = new StringBuilder
       // clean candidate: COW rewrite of the nation-5 bucket, +500
       base.filter(col("nk") === 5)

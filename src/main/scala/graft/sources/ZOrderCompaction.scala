@@ -57,11 +57,8 @@ object ZOrderCompaction {
     * stats. Returns (committedVersion, attempts).
     */
   private[graft] def zOrderCompact(s: SparkSession, dir: String,
-      tag: String, nFiles: Int, maxAttempts: Int = 10): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
+      tag: String, nFiles: Int): (Int, Int) =
+    Store.retryOnConflict(dir, tag) { (h, sub) =>
       val files = Snapshots.manifest(dir, h)
       val df = s.read.parquet(files.sorted: _*)
       val r = df.agg(min(col("k")), max(col("k")),
@@ -69,22 +66,14 @@ object ZOrderCompaction {
       val z = interleave(
         gridCoord(col("k"), r.getLong(0), r.getLong(1)),
         gridCoord(col("bal"), r.getLong(2), r.getLong(3)))
-      val sub = s"$tag${h}a$attempt"
       df.withColumn("_z", z)
         .repartitionByRange(nFiles, col("_z"))
         .sortWithinPartitions(col("_z"), col("k"))
         .select(col("k"), col("nkd"), col("bal"))
         .write.mode("overwrite").parquet(s"$dir/$sub")
       val added = SchemaStats.entries(s, Store.walkLeafFiles(dir, sub))
-      try return (Snapshots.occCommit(dir, h, files.toSet, added)._1,
-        attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      Snapshots.occCommit(dir, h, files.toSet, added)._1
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** BUCKET-SCOPED z-order rewrite — OPTIMIZE ZORDER BY racing live
     * writers, the production shape of s44's one-shot demo: each attempt
@@ -106,37 +95,23 @@ object ZOrderCompaction {
     * ingest, ingest never corrupts maintenance" structural.
     */
   private[graft] def zOrderCompactBucket(s: SparkSession, dir: String,
-      nk: Int, tag: String, nFiles: Int, maxAttempts: Int = 10)
-      : (Int, Int) = {
-    val sep = java.io.File.separator
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
-      val bucket = Snapshots.manifest(dir, h)
-        .filter(_.contains(s"${sep}nk=$nk$sep")).toSet
-      require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
+      nk: Int, tag: String, nFiles: Int): (Int, Int) =
+    Store.retryOnConflict(dir, tag) { (h, sub) =>
+      val bucket = Snapshots.bucketFiles(dir, h, nk)
       val df = s.read.parquet(bucket.toSeq.sorted: _*)
       val r = df.agg(min(col("k")), max(col("k")),
         min(col("bal")), max(col("bal"))).head() // domain probe: 1 row
       val z = interleave(
         gridCoord(col("k"), r.getLong(0), r.getLong(1)),
         gridCoord(col("bal"), r.getLong(2), r.getLong(3)))
-      val sub = s"$tag${h}a$attempt"
       df.withColumn("_z", z)
         .repartitionByRange(nFiles, col("_z"))
         .sortWithinPartitions(col("_z"), col("k"))
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
       val added = SchemaStats.entries(s, Store.walkLeafFiles(dir, sub))
-      try return (Snapshots.occCommit(dir, h, bucket, added)._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      Snapshots.occCommit(dir, h, bucket, added)._1
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Paths of version `v` whose named bounds intersect EVERY queried
     * column's range — the multi-column prune (per-column logic exactly
@@ -176,10 +151,8 @@ object ZOrderCompaction {
           round(col("c_acctbal") * 100).cast("long").as("bal"))
       base.repartition(NFiles, col("k"))
         .write.mode("overwrite").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1")))
       require(zOrderCompact(s, dir, "zo", NFiles)._1 == 2)
     }
 
@@ -237,10 +210,8 @@ object ZOrderCompaction {
           round(col("c_acctbal") * 100).cast("long").as("bal"))
       base.repartition(NFiles, col("k"))
         .write.mode("overwrite").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1")))
       val doomed = base.filter(col("nkd") % 7 === 5 && col("k") % 19 === 0)
         .select(col("k"), col("nkd").as("nk"))
       require(TxnDeletes.commitEqualityDelete(s, dir, doomed, "d") == 2)

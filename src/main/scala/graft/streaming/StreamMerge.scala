@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.{Q, Tables}
-import graft.sources.Snapshots
+import graft.sources.{Snapshots, Store}
 
 /** E28: STREAMING CDC MERGE — the change-capture stream applied to the
   * lakehouse table transactionally, composing the round's pieces into
@@ -144,13 +144,7 @@ object StreamMerge {
   private[graft] def ledgerVacuum(store: String): (Int, Int) = {
     val h = Snapshots.head(store)
     val batches = committedBatches(store)
-    val tmp = java.nio.file.Paths.get(s"$store/_batches.tmp")
-    java.nio.file.Files.write(tmp,
-      batches.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(s"$store/_batches.txt"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Store.writeLinesAtomic(s"$store/_batches.txt", batches.toSeq.sorted)
     val live = Snapshots.manifest(store, h).toSet
     val expired = (1 until h).flatMap(v => Snapshots.manifest(store, v))
       .toSet -- live
